@@ -9,9 +9,10 @@ Algorithm: iterative minimum-label propagation on DataFrames — each round
 every node adopts the smallest label among itself and its neighbors;
 ``localCheckpoint`` truncates lineage per round. Convergence takes
 O(diameter) rounds; alias graphs are star-shaped (diameter ≤ 2), and
-``max_iterations`` bounds pathological chains. For adversarially deep
-graphs swap in the large-star/small-star variant — the driver loop and
-checkpoint discipline stay the same. No GraphFrames dependency.
+``max_iterations`` bounds pathological chains (a loop that has not
+converged by then raises). For adversarially deep graphs swap in the
+large-star/small-star variant — the driver loop and checkpoint
+discipline stay the same. No GraphFrames dependency.
 """
 
 from __future__ import annotations
@@ -25,7 +26,11 @@ def connected_components(
 ) -> DataFrame:
     """``(src, dst)`` string edges → ``(node, component)`` where component
     is the min node id of the component. Only nodes that appear in an edge
-    are returned (isolated nodes are their own trivial component)."""
+    are returned (isolated nodes are their own trivial component).
+
+    A chain of k edges needs k + 1 rounds (the last one confirms that no
+    label changed); ``RuntimeError`` when ``max_iterations`` rounds end
+    with labels still changing."""
     und = (
         edges.select(F.col("src"), F.col("dst"))
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -60,8 +65,13 @@ def connected_components(
         )
         labels = new_labels
         if changed == 0:
-            break
-    return labels
+            return labels
+    # unconverged labels would silently split components (wrong canonical
+    # ids downstream) — fail loudly, as inference.transitive_closure does
+    raise RuntimeError(
+        f"connected_components did not converge within max_iterations="
+        f"{max_iterations}; raise it for components of larger diameter"
+    )
 
 
 def canonical_mapping(
@@ -148,15 +158,6 @@ def union_find_mapping(
         rep = canon[0] if canon else min(nodes)
         out.extend((n, rep) for n in nodes if n != rep)
     return out
-
-
-def _driver_canonical_mapping(edges: DataFrame) -> DataFrame:
-    """Union-find twin of the distributed path, for small edge sets."""
-    rows = [(r["src"], r["dst"]) for r in edges.collect()]
-    out = union_find_mapping(rows)
-    return edges.sparkSession.createDataFrame(
-        out or [], "node string, component string"
-    )
 
 
 def rewrite_terms(quads: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -14,19 +14,19 @@ pattern match, size, drop, Turtle export) with no external service:
     client = endpoint.client("https://g.example/my-graph")
     client.add_triples(triples)        # SPARQL in, engine answers
 
-Update grammar accepted (exactly what the client generates, mirroring
-blazegraph_store.go:104, 166, 248, 289): ``INSERT DATA { GRAPH <g> {…} }``,
-``DELETE DATA { GRAPH <g> {…} }``, ``DELETE WHERE { GRAPH <g> { s p o } }``
-(variables = wildcards), ``DROP GRAPH <g>`` — plus ``CLEAR GRAPH <g>``
-and the graph-management forms ``COPY|MOVE|ADD [GRAPH] <src> TO
-[GRAPH] <dst>`` (SPARQL 1.1 §3.2.2-3.2.5, whole-graph DataFrame
-merges), ``CREATE [SILENT] GRAPH <g>`` (§3.2.1),
-``LOAD [SILENT] <doc> [INTO GRAPH <g>]`` (distributed
-N-Triples/N-Quads bulk read, §3.1.4) and the SPARQL 1.1 Modify form
-``[WITH <g>] [DELETE {…}] [INSERT {…}] (USING [NAMED] <g>)* WHERE
-{ … }``, which solves the WHERE group once and commits each graph's
-instantiated batch distributed (merge_df / delete_df; DELETE before
-INSERT over the same solutions, both materialized pre-commit).
+Updates: :func:`~ontograph_spark.query.sparql.parse_update` reads the
+request (``BASE``/``PREFIX`` prologue + one operation) and
+:meth:`LocalSparqlEndpoint.update` dispatches on its record: the client's
+forms (blazegraph_store.go:104, 166, 248, 289) ``INSERT DATA``,
+``DELETE DATA``, ``DELETE WHERE`` (the Modify shorthand: one solved
+group) and ``DROP GRAPH``, plus ``CLEAR``/``CREATE [SILENT]``,
+``COPY|MOVE|ADD`` as whole-graph DataFrame merges (§3.2), ``LOAD
+[SILENT] <doc> [INTO GRAPH <g>]`` as a distributed N-Triples/N-Quads
+read (§3.1.4), and the Modify form ``[WITH <g>] [DELETE {…}] [INSERT
+{…}] (USING [NAMED] <g>)* WHERE { … }``, which solves the WHERE group
+once and commits each graph's batch distributed (merge_df / delete_df;
+DELETE before INSERT over the same solutions, both materialized
+pre-commit).
 
 Scale note: this adapter is the *compatibility* path — per-operation
 driver round-trips, like the reference's own client. Bulk pipelines
@@ -36,19 +36,19 @@ should write through :meth:`QuadStoreBase.merge_df` and query through
 
 from __future__ import annotations
 
-import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ontograph_spark.query.sparql import (
-    Group,
     SparqlSyntaxError,
+    Update,
     _Parser,
-    parse_group_text,
+    parse_update,
     sparql_ask,
     sparql_select,
+    sparql_update_template,
 )
 from ontograph_spark.store.base import QUAD_SCHEMA, QuadStoreBase
 from ontograph_spark.store.sparql_store import SparqlQuadStore
@@ -60,84 +60,6 @@ from ontograph_spark.terms import (
     term_language,
     term_value,
 )
-
-_UPDATE_RE = re.compile(
-    r"\s*(INSERT\s+DATA|DELETE\s+DATA|DELETE\s+WHERE|DROP\s+GRAPH"
-    r"|CLEAR\s+GRAPH|COPY|MOVE|ADD)\s*(.*)",
-    re.S | re.I,
-)
-
-#: an IRIREF or a prefixed name, incl. the empty prefix ``:local``
-#: (resolved via the update's prologue)
-_IRI_OR_PNAME = r"(?:<[^<>\s]+>|(?:[A-Za-z_][\w-]*)?:[\w.-]+)"
-
-_CREATE_RE = re.compile(
-    rf"\s*CREATE\s+(SILENT\s+)?GRAPH\s+({_IRI_OR_PNAME})\s*$", re.I
-)
-
-_GRAPH_PAIR_RE = re.compile(
-    r"(?:GRAPH\s+)?<([^<>\s]+)>\s+TO\s+(?:GRAPH\s+)?<([^<>\s]+)>\s*$",
-    re.I,
-)
-
-_LOAD_RE = re.compile(
-    rf"\s*LOAD\s+(SILENT\s+)?({_IRI_OR_PNAME})"
-    rf"(?:\s+INTO\s+GRAPH\s+({_IRI_OR_PNAME}))?\s*$",
-    re.I,
-)
-
-_PROLOGUE_RE = re.compile(
-    r"\s*(?:\#[^\n]*(?:\n|$)"
-    r"|BASE\s+<[^<>\s]*>"
-    r"|PREFIX\s+([A-Za-z_][\w-]*)?:\s*<([^<>\s]*)>)",
-    re.I,
-)
-
-
-_BASE_RE = re.compile(r"BASE\s+<([^<>\s]*)>", re.I)
-
-
-def _strip_prologue(text: str) -> tuple[dict[str, str], str | None, str]:
-    """Strip leading comments and BASE/PREFIX declarations from an
-    update, returning (prefix map, base IRI or None, remaining text) —
-    so 'PREFIX … CREATE GRAPH <g>' or a leading comment still routes to
-    the CREATE/LOAD fast forms instead of falling through to the Modify
-    template parser with an unrelated error."""
-    prefixes: dict[str, str] = {}
-    base: str | None = None
-    pos = 0
-    while True:
-        m = _PROLOGUE_RE.match(text, pos)
-        if m is None:
-            break
-        if m.group(2) is not None:
-            prefixes[m.group(1) or ""] = m.group(2)
-        else:
-            bm = _BASE_RE.search(m.group(0))
-            if bm is not None:
-                base = bm.group(1)
-        pos = m.end()
-    return prefixes, base, text[pos:]
-
-
-def _resolve_iri(
-    tok: str, prefixes: dict[str, str], base: str | None = None
-) -> str:
-    """An ``<iri>`` or ``pfx:local`` token → the bare IRI text, with
-    relative IRIREFs resolved against the prologue's BASE (RFC 3986 via
-    urljoin — a relative IRI with no BASE stays as written, like a
-    parser with an empty base)."""
-    if tok.startswith("<"):
-        iri = tok[1:-1]
-        if base and not re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", iri):
-            import urllib.parse
-
-            return urllib.parse.urljoin(base, iri)
-        return iri
-    pfx, local = tok.split(":", 1)
-    if pfx not in prefixes:
-        raise SparqlSyntaxError(f"unknown prefix {pfx!r} in {tok!r}")
-    return prefixes[pfx] + local
 
 
 def term_to_binding(term: str) -> dict:
@@ -253,123 +175,75 @@ class LocalSparqlEndpoint:
         return serialize_results(self.query(sparql), accept)
 
     def update(self, sparql: str) -> None:
-        """Execute an update by dispatching to the graph's store operators.
-        Template updates (``INSERT|DELETE { … } WHERE { … }``) solve the
-        WHERE group over the whole dataset and commit each target graph's
+        """Execute one update by dispatching its parsed record to the
+        graphs' store operators. The DATA forms take the stores' batch
+        path (``add_triples_unchecked`` / ``delete_triples_unchecked``);
+        Modify updates (``DELETE WHERE`` included) solve the WHERE group
+        over the whole dataset and commit each target graph's
         instantiated batch distributed (merge_df / delete_df — no
         driver-side triple lists)."""
-        prefixes, base, body = _strip_prologue(sparql)
-        cm = _CREATE_RE.match(body)
-        if cm is not None:
-            # CREATE [SILENT] GRAPH <g> (§3.2.1): make the graph managed;
-            # an already-managed graph is an error unless SILENT
-            uri = _resolve_iri(cm.group(2), prefixes, base)
-            if uri in self._stores and not cm.group(1):
-                raise SparqlSyntaxError(f"graph already exists: <{uri}>")
-            self.store_for(uri)
-            return
-        lm = _LOAD_RE.match(body)
-        if lm is not None:
-            self._load(
-                silent=lm.group(1) is not None,
-                source=_resolve_iri(lm.group(2), prefixes, base),
-                into=(
-                    _resolve_iri(lm.group(3), prefixes, base)
-                    if lm.group(3)
-                    else None
-                ),
-            )
-            return
-        # the remaining fast forms keep matching the RAW text — a
-        # prologue routes them to the full Modify template parser,
-        # which resolves prefixes itself
-        m = _UPDATE_RE.match(sparql)
-        if m is None:
-            from ontograph_spark.query.sparql import sparql_update_template
-
-            ops = sparql_update_template(self._world(), sparql)
-            if len(ops) > 1:
-                # DELETE + INSERT instantiate against the same WHERE
-                # solutions: materialize every batch BEFORE the first
-                # commit, or the delete would change what the lazy
-                # insert batch scans
-                ops = [
-                    (
-                        form,
-                        {
-                            uri: batch.localCheckpoint(eager=True)
-                            for uri, batch in by_graph.items()
-                        },
-                    )
-                    for form, by_graph in ops
-                ]
-            for form, by_graph in ops:
-                for uri, batch in by_graph.items():
-                    store = self.store_for(uri)
-                    if form == "INSERT":
-                        store.merge_df(batch)
-                    else:
-                        store.delete_df(batch)
-            return
-        form = re.sub(r"\s+", " ", m.group(1).upper())
-        rest = m.group(2)
-        if form in ("DROP GRAPH", "CLEAR GRAPH"):
-            iri = rest.strip()
-            if not (iri.startswith("<") and iri.endswith(">")):
-                raise SparqlSyntaxError(f"{form} needs an IRI: {rest!r}")
-            uri = iri[1:-1]
-            if form == "CLEAR GRAPH":
-                # graph stays managed, contents removed (SPARQL §3.2.2)
-                self.store_for(uri).delete_all_matches("", "", "")
-                return
-            self.store_for(uri).drop()
-            del self._stores[uri]
-            return
-        if form in ("COPY", "MOVE", "ADD"):
-            # SPARQL 1.1 Update graph management (§3.2.3-3.2.5):
-            # COPY = replace dst with src; ADD = union into dst;
-            # MOVE = COPY then drop src. Whole-graph DataFrame merges —
-            # no triple lists on the driver.
-            pm = _GRAPH_PAIR_RE.match(rest.strip())
-            if pm is None:
-                raise SparqlSyntaxError(
-                    f"{form} needs GRAPH <src> TO GRAPH <dst>: {rest!r}"
-                )
-            src_uri, dst_uri = pm.group(1), pm.group(2)
-            if src_uri == dst_uri:
-                return  # no-op per spec
-            src = self.store_for(src_uri)
-            dst = self.store_for(dst_uri)
-            if form in ("COPY", "MOVE"):
-                dst.delete_all_matches("", "", "")
-            dst.merge_df(
-                src.df().withColumn("graph", F.lit(dst_uri))
-            )
-            if form == "MOVE":
-                src.drop()
-                del self._stores[src_uri]
-            return
-        group = parse_group_text(rest)
-        if not group.is_plain_triples():
-            raise SparqlSyntaxError(f"{form} body must be plain triples")
-        if form in ("INSERT DATA", "DELETE DATA"):
-            by_graph = self._data_triples(group, form)
-            for uri, triples in by_graph.items():
+        op = parse_update(sparql)
+        if op.kind in ("INSERT DATA", "DELETE DATA"):
+            for uri, triples in op.data.items():
                 store = self.store_for(uri)
-                if form == "INSERT DATA":
-                    store.add_triples_unchecked(triples)
+                rows = [Triple(*t) for t in triples]
+                if op.kind == "INSERT DATA":
+                    store.add_triples_unchecked(rows)
                 else:
-                    store.delete_triples_unchecked(triples)
-            return
-        # DELETE WHERE: each pattern is an independent wildcard delete
-        for pat in group.patterns:
-            if pat.g is None or pat.g[0] != "term":
-                raise SparqlSyntaxError("DELETE WHERE needs GRAPH <uri> scope")
-            wild = [
-                val if kind == "term" else ""
-                for kind, val in (pat.s, pat.p, pat.o)
+                    store.delete_triples_unchecked(rows)
+        elif op.kind == "MODIFY":
+            self._modify(op)
+        elif op.kind == "CREATE":
+            # make the graph managed; an already-managed graph is an
+            # error unless SILENT (§3.2.1)
+            if op.graph in self._stores and not op.silent:
+                raise SparqlSyntaxError(f"graph already exists: <{op.graph}>")
+            self.store_for(op.graph)
+        elif op.kind == "CLEAR":
+            # graph stays managed, contents removed (§3.2.2)
+            self.store_for(op.graph).delete_all_matches("", "", "")
+        elif op.kind == "DROP":
+            self.store_for(op.graph).drop()
+            del self._stores[op.graph]
+        elif op.kind == "LOAD":
+            self._load(op.silent, op.source, op.graph)
+        elif op.source != op.graph:  # COPY / MOVE / ADD onto itself: no-op
+            # COPY = replace dst with src; ADD = union into dst; MOVE =
+            # COPY then drop src (§3.2.3-3.2.5). Whole-graph DataFrame
+            # merges — no triple lists on the driver.
+            src = self.store_for(op.source)
+            dst = self.store_for(op.graph)
+            if op.kind in ("COPY", "MOVE"):
+                dst.delete_all_matches("", "", "")
+            dst.merge_df(src.df().withColumn("graph", F.lit(op.graph)))
+            if op.kind == "MOVE":
+                src.drop()
+                del self._stores[op.source]
+
+    def _modify(self, op: Update) -> None:
+        ops = sparql_update_template(self._world(), op)
+        if len(ops) > 1:
+            # DELETE + INSERT instantiate against the same WHERE
+            # solutions: materialize every batch BEFORE the first
+            # commit, or the delete would change what the lazy insert
+            # batch scans
+            ops = [
+                (
+                    form,
+                    {
+                        uri: batch.localCheckpoint(eager=True)
+                        for uri, batch in by_graph.items()
+                    },
+                )
+                for form, by_graph in ops
             ]
-            self.store_for(pat.g[1]).delete_all_matches(*wild)
+        for form, by_graph in ops:
+            for uri, batch in by_graph.items():
+                store = self.store_for(uri)
+                if form == "INSERT":
+                    store.merge_df(batch)
+                else:
+                    store.delete_df(batch)
 
     def _load(self, silent: bool, source: str, into: str | None) -> None:
         """SPARQL 1.1 Update ``LOAD [SILENT] <doc> [INTO GRAPH <g>]``
@@ -437,20 +311,6 @@ class LocalSparqlEndpoint:
             return
         for g in graphs:
             self.store_for(g).merge_df(quads.where(F.col("graph") == g))
-
-    @staticmethod
-    def _data_triples(group: Group, form: str) -> dict[str, list[Triple]]:
-        out: dict[str, list[Triple]] = {}
-        for pat in group.patterns:
-            if pat.g is None or pat.g[0] != "term":
-                raise SparqlSyntaxError(f"{form} needs GRAPH <uri> scope")
-            slots = []
-            for kind, val in (pat.s, pat.p, pat.o):
-                if kind != "term":
-                    raise SparqlSyntaxError(f"{form} cannot contain variables")
-                slots.append(val)
-            out.setdefault(pat.g[1], []).append(Triple(*slots))
-        return out
 
 
 class _LocalClient(SparqlQuadStore):

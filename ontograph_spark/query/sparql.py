@@ -1,5 +1,5 @@
-"""SPARQL SELECT/ASK/CONSTRUCT/DESCRIBE answering — and INSERT/DELETE
-template updates — compiled to DataFrame algebra.
+"""SPARQL SELECT/ASK/CONSTRUCT/DESCRIBE answering — and the SPARQL 1.1
+Update grammar — compiled to DataFrame algebra.
 
 The reference can only *issue* SPARQL — every Blazegraph operator builds a
 query string and POSTs it to an endpoint that does the actual matching
@@ -15,7 +15,8 @@ pattern slots, are transcribed verbatim and pinned in
 tests/test_sparql_query.py alongside the repo's own
 ``SparqlQuadStore.select_sparql/ask_sparql/count_sparql`` builder output):
 
-* ``PREFIX`` declarations + prefixed names + ``a`` ≡ ``rdf:type``;
+* a ``BASE`` / ``PREFIX`` prologue (relative IRIREFs resolve against
+  BASE per RFC 3986) + prefixed names + ``a`` ≡ ``rdf:type``;
 * ``SELECT [DISTINCT] ?v … | * | (AGG([DISTINCT] *|?v) AS ?n)`` where
   ``AGG`` is COUNT / SUM / AVG / MIN / MAX / SAMPLE /
   ``GROUP_CONCAT(?v; SEPARATOR="…")``, with ``GROUP BY ?v …`` or
@@ -123,10 +124,10 @@ tests/test_sparql_query.py alongside the repo's own
 * ``DESCRIBE <iri>… ?var… [WHERE { … }]`` via :func:`sparql_describe` —
   subject-oriented description (constants push down as a ``subj IN``
   scan filter, variable targets one distributed semi-join);
-* ``INSERT|DELETE { template } WHERE { … }`` via
-  :func:`sparql_update_template` — solved distributed, committed
-  through ``merge_df`` / ``delete_df`` (the endpoint routes per
-  target graph).
+* SPARQL 1.1 Update: :func:`parse_update` reads the prologue and one
+  operation into an :class:`Update` record (every form is listed on
+  it); :func:`sparql_update_template` solves a Modify distributed for
+  ``merge_df`` / ``delete_df``, and query/endpoint.py executes them.
 
 Query-side blank nodes (``_:label`` / ``[]``) are anonymous variables
 (SPARQL §4.1.4): same label joins within the query, never projectable.
@@ -190,6 +191,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from urllib.parse import urljoin
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -255,6 +257,10 @@ _TOKEN_RE = re.compile(
     """,
     re.X,
 )
+
+
+#: an IRI with a scheme (RFC 3986 §3.1) — BASE leaves these as written
+_ABSOLUTE_IRI_RE = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
 
 
 def _tokenize(text: str) -> list[tuple[str, str]]:
@@ -411,6 +417,31 @@ class Query:
     trailing_values: list = field(default_factory=list)
 
 
+@dataclass
+class Update:
+    """One SPARQL 1.1 Update operation. ``kind`` and the fields it uses:
+    ``INSERT DATA`` / ``DELETE DATA`` (``data``), ``MODIFY`` incl. the
+    ``DELETE WHERE`` shorthand (``templates``, ``where``, ``with_graph``,
+    ``using``), ``DROP`` / ``CLEAR`` / ``CREATE [SILENT]`` (``graph``),
+    ``COPY`` / ``MOVE`` / ``ADD`` (``source`` → ``graph``) and ``LOAD
+    [SILENT]`` (``source`` document, ``INTO GRAPH`` or None). Not
+    accepted: ``;`` sequences, DEFAULT/NAMED/ALL targets, other
+    SILENTs."""
+
+    kind: str
+    graph: str | None = None
+    source: str | None = None
+    silent: bool = False
+    #: DATA forms: graph IRI → ground (subj, pred, obj) terms
+    data: dict[str, list[tuple[str, str, str]]] = field(default_factory=dict)
+    #: MODIFY: ("DELETE" | "INSERT", template), DELETE first (§3.1.3)
+    templates: list[tuple[str, Group]] = field(default_factory=list)
+    where: Group | None = None
+    with_graph: str | None = None
+    #: USING [NAMED] clauses — ``named`` is None when none appeared
+    using: "_Dataset | None" = None
+
+
 _AGG_FUNCS = ("COUNT", "SUM", "AVG", "MIN", "MAX", "GROUP_CONCAT", "SAMPLE")
 
 
@@ -499,6 +530,13 @@ class _Parser:
     def at_kw(self, *words: str) -> bool:
         t = self.peek()
         return t is not None and t[0] == "NAME" and t[1].upper() in words
+
+    def accept_kw(self, word: str) -> bool:
+        """Consume ``word`` if it is next; report whether it was."""
+        if self.at_kw(word):
+            self.i += 1
+            return True
+        return False
 
     def expect_kw(self, word: str) -> None:
         if not self.at_kw(word):
@@ -682,44 +720,45 @@ class _Parser:
 
     # -- query ---------------------------------------------------------------
 
-    def _parse_dataset(self) -> "_Dataset":
+    def _parse_dataset(self, word: str = "FROM") -> "_Dataset":
         """``FROM <iri>`` / ``FROM NAMED <iri>`` dataset clauses (the
         reference emits plain FROM in its COUNT/CONSTRUCT forms,
-        blazegraph_store.go:329,398). The FROMs form the default graph
-        (union); the FROM NAMEDs restrict which graphs ``GRAPH`` blocks
-        may match (SPARQL 1.1 §13.2: once any dataset clause appears,
-        the dataset is exactly as described — FROM-only means GRAPH
-        matches nothing, FROM NAMED-only means an empty default graph)."""
+        blazegraph_store.go:329,398), or an update's ``USING [NAMED]``
+        twins (§3.1.3). The FROMs form the default graph (union); the
+        FROM NAMEDs restrict which graphs ``GRAPH`` blocks may match
+        (SPARQL 1.1 §13.2: once any dataset clause appears, the dataset
+        is exactly as described — FROM-only means GRAPH matches nothing,
+        FROM NAMED-only means an empty default graph)."""
         out = _Dataset()
-        while self.at_kw("FROM"):
-            self.next()
-            is_named = False
-            if self.at_kw("NAMED"):
-                self.next()
-                is_named = True
-            kind, text = self.next()
-            if kind == "IRI":
-                iri = text[1:-1]
-            elif kind == "PNAME":
-                iri = self.expand_pname(text)[1:-1]
-            else:
-                raise SparqlSyntaxError(f"FROM needs an IRI, got {text!r}")
-            if is_named:
+        while self.accept_kw(word):
+            if self.accept_kw("NAMED"):
                 if out.named is None:
                     out.named = []
-                out.named.append(iri)
+                out.named.append(self.parse_iri())
             else:
-                out.append(iri)
+                out.append(self.parse_iri())
         if out and out.named is None:
             # dataset described with FROM only ⇒ it has NO named graphs
             out.named = []
         return out
 
+    def parse_iri(self) -> str:
+        """An IRIREF or prefixed name (a dataset clause, a graph name in
+        an update) → the bare IRI."""
+        kind, text = self.next()
+        if kind == "IRI":
+            return text[1:-1]
+        if kind == "PNAME":
+            return self.expand_pname(text)[1:-1]
+        raise SparqlSyntaxError(f"expected an IRI, got {text!r}")
+
     def parse_prologue(self) -> None:
-        """``PREFIX pfx: <iri>`` declarations (shared by queries and
-        template updates)."""
-        while self.at_kw("PREFIX"):
-            self.next()
+        """``BASE <iri>`` and ``PREFIX pfx: <iri>`` declarations (shared
+        by queries and updates)."""
+        while self.at_kw("PREFIX", "BASE"):
+            if self.next()[1].upper() == "BASE":
+                self._set_base(self.parse_iri())
+                continue
             kind, pname = self.next()
             if kind != "PNAME" and not (kind == "OP" and pname == ":"):
                 raise SparqlSyntaxError(f"bad PREFIX name {pname!r}")
@@ -730,12 +769,116 @@ class _Parser:
             # when a local part follows, so accept both "pfx:" and "pfx:x"
             self.prefixes[pname.split(":", 1)[0]] = iri[1:-1]
 
+    def _set_base(self, base: str) -> None:
+        """Resolve every relative IRIREF token after a ``BASE`` against it
+        (RFC 3986 via urljoin) — the one place BASE applies. Resolution
+        stops at the next BASE's own IRI, which that BASE then applies to
+        the tokens after it. Absolute IRIs are left as written."""
+        stop = len(self.toks)
+        for j in range(self.i, len(self.toks)):
+            if j >= stop:
+                break
+            kind, text = self.toks[j]
+            if kind == "NAME" and text.upper() == "BASE":
+                stop = j + 2
+            elif kind == "IRI" and not _ABSOLUTE_IRI_RE.match(text, 1):
+                self.toks[j] = (kind, f"<{urljoin(base, text[1:-1])}>")
+
     def parse_query(self) -> Query:
         self.parse_prologue()
         q = self._parse_query_main()
         if self.peek() is not None:
             raise SparqlSyntaxError(f"trailing tokens at {self.peek()}")
         return q
+
+    def parse_update(self) -> Update:
+        """The prologue and ONE update operation (``;``-separated
+        sequences are not accepted)."""
+        self.parse_prologue()
+        t = self.peek()
+        word = t[1].upper() if t is not None and t[0] == "NAME" else ""
+        nxt = self.toks[self.i + 1][1] if self.i + 1 < len(self.toks) else ""
+        if word in ("INSERT", "DELETE") and nxt.upper() == "DATA":
+            self.i += 2
+            op = Update(f"{word} DATA", data=self._parse_quad_data(word))
+        elif word in ("DROP", "CLEAR", "CREATE"):
+            # (§3.2.1-3.2.2) SILENT only on CREATE; no DEFAULT/NAMED/ALL
+            self.next()
+            silent = word == "CREATE" and self.accept_kw("SILENT")
+            self.expect_kw("GRAPH")
+            op = Update(word, graph=self.parse_iri(), silent=silent)
+        elif word in ("COPY", "MOVE", "ADD"):
+            # [GRAPH] <src> TO [GRAPH] <dst> (§3.2.3-3.2.5)
+            self.next()
+            self.accept_kw("GRAPH")
+            src = self.parse_iri()
+            self.expect_kw("TO")
+            self.accept_kw("GRAPH")
+            op = Update(word, source=src, graph=self.parse_iri())
+        elif word == "LOAD":
+            # LOAD [SILENT] <doc> [INTO GRAPH <g>] (§3.1.4)
+            self.next()
+            op = Update("LOAD", silent=self.accept_kw("SILENT"))
+            op.source = self.parse_iri()
+            if self.accept_kw("INTO"):
+                self.expect_kw("GRAPH")
+                op.graph = self.parse_iri()
+        else:
+            op = self._parse_modify()
+        if self.peek() is not None:
+            raise SparqlSyntaxError(f"trailing tokens at {self.peek()}")
+        return op
+
+    def _parse_quad_data(
+        self, word: str
+    ) -> dict[str, list[tuple[str, str, str]]]:
+        """An INSERT/DELETE DATA body: ground triples, each inside a
+        ``GRAPH <g>`` block (this endpoint has no unnamed default
+        graph)."""
+        form = f"{word} DATA"
+        group = self.parse_group()
+        if not group.is_plain_triples():
+            raise SparqlSyntaxError(f"{form} body must be plain triples")
+        out: dict[str, list[tuple[str, str, str]]] = {}
+        for pat in group.patterns:
+            if pat.g is None or pat.g[0] != "term":
+                raise SparqlSyntaxError(f"{form} needs GRAPH <uri> scope")
+            if any(kind != "term" for kind, _ in (pat.s, pat.p, pat.o)):
+                raise SparqlSyntaxError(f"{form} cannot contain variables")
+            out.setdefault(pat.g[1], []).append((pat.s[1], pat.p[1], pat.o[1]))
+        return out
+
+    def _parse_modify(self) -> Update:
+        """The Modify form (§3.1.3) ``[WITH <g>] ( DELETE {t} [INSERT {t}]
+        | INSERT {t} ) (USING [NAMED] <g>)* WHERE { group }`` and its
+        ``DELETE WHERE { triples }`` shorthand (§3.1.3.3), whose WHERE
+        group doubles as the delete template."""
+        op = Update("MODIFY")
+        if self.accept_kw("WITH"):
+            # the graph for un-scoped template patterns, and the WHERE
+            # default graph when no USING clause appears
+            op.with_graph = self.parse_iri()
+        shorthand = False
+        if self.accept_kw("DELETE"):
+            shorthand = self.at_kw("WHERE")
+            if not shorthand:
+                op.templates.append(("DELETE", self.parse_group()))
+                if self.accept_kw("INSERT"):
+                    op.templates.append(("INSERT", self.parse_group()))
+        elif self.accept_kw("INSERT"):
+            op.templates.append(("INSERT", self.parse_group()))
+        else:
+            raise SparqlSyntaxError(f"expected an update operation at {self.peek()}")
+        op.using = self._parse_dataset("USING")
+        self.expect_kw("WHERE")
+        op.where = self.parse_group()
+        if shorthand:
+            if not op.where.is_plain_triples():
+                raise SparqlSyntaxError(
+                    "DELETE WHERE shorthand needs a plain triple block"
+                )
+            op.templates.append(("DELETE", op.where))
+        return op
 
     def _parse_query_main(self) -> Query:
         """One query form, without the PREFIX prologue or the trailing-
@@ -3206,104 +3349,41 @@ def sparql_describe(quads: DataFrame, query: str) -> DataFrame:
     return out.select("subj", "pred", "obj").distinct()
 
 
+def parse_update(update: str) -> Update:
+    """Parse one SPARQL 1.1 Update request (prologue + operation) into
+    its :class:`Update` record — the whole update grammar the in-process
+    endpoint executes."""
+    return _Parser(update).parse_update()
+
+
 def sparql_update_template(
-    quads: DataFrame, update: str
+    quads: DataFrame, op: Update
 ) -> list[tuple[str, dict[str, DataFrame]]]:
-    """Parse and solve the SPARQL 1.1 Update Modify form (§3.1.3) —
-    ``[PREFIX …] [WITH <g>] ( DELETE {t} [INSERT {t}] | INSERT {t} )
-    (USING [NAMED] <g>)* WHERE { group }`` (the quad-data forms INSERT
-    DATA / DELETE DATA / DELETE WHERE live on the endpoint). ``WITH``
-    supplies the GRAPH scope for un-scoped template patterns and the
-    WHERE default graph; ``USING [NAMED]`` mirrors ``FROM [NAMED]`` and
-    overrides WITH for the WHERE clause. Both templates instantiate
-    against the SAME solution set; the returned ops list orders DELETE
-    before INSERT per the spec — each op is (form, {graph uri →
-    distinct quad DataFrame}) so the caller can route batches to their
-    owning stores (materialize all batches before committing any:
-    committing the DELETE first would otherwise change what a lazy
-    INSERT batch scans). Solving + instantiation are pure DataFrame
-    algebra; committing through ``merge_df`` / ``delete_df`` keeps the
-    whole update distributed (no driver-side triple lists) — the
-    rule-based materialization path a KG pipeline uses for derived
-    edges."""
-    p = _Parser(update)
-    p.parse_prologue()
-    with_graph: str | None = None
-    if p.at_kw("WITH"):
-        # WITH <g> (§3.1.3): the graph for un-scoped template patterns,
-        # and the WHERE default graph when no USING clause appears
-        p.next()
-        kind, text = p.next()
-        if kind == "IRI":
-            with_graph = text[1:-1]
-        elif kind == "PNAME":
-            with_graph = p.expand_pname(text)[1:-1]
-        else:
-            raise SparqlSyntaxError(f"WITH needs an IRI, got {text!r}")
-    templates: list[tuple[str, Group]] = []
-    delete_where_shorthand = False
-    if p.at_kw("DELETE"):
-        p.next()
-        if p.at_kw("WHERE"):
-            # DELETE WHERE { … } shorthand (§3.1.3.3): the WHERE group
-            # doubles as the delete template — parsed below
-            delete_where_shorthand = True
-        else:
-            templates.append(("DELETE", p.parse_group()))
-            if p.at_kw("INSERT"):
-                p.next()
-                templates.append(("INSERT", p.parse_group()))
-    elif p.at_kw("INSERT"):
-        p.next()
-        templates.append(("INSERT", p.parse_group()))
-    else:
-        raise SparqlSyntaxError("expected INSERT or DELETE template update")
-    # USING [NAMED] <g> mirrors FROM [NAMED] for the WHERE clause and
-    # overrides WITH's default graph (§3.1.3)
-    using = _Dataset()
-    has_using = False
-    while p.at_kw("USING"):
-        has_using = True
-        p.next()
-        is_named = False
-        if p.at_kw("NAMED"):
-            p.next()
-            is_named = True
-        kind, text = p.next()
-        if kind == "IRI":
-            iri = text[1:-1]
-        elif kind == "PNAME":
-            iri = p.expand_pname(text)[1:-1]
-        else:
-            raise SparqlSyntaxError(f"USING needs an IRI, got {text!r}")
-        if is_named:
-            if using.named is None:
-                using.named = []
-            using.named.append(iri)
-        else:
-            using.append(iri)
-    if using and using.named is None:
-        using.named = []
-    p.expect_kw("WHERE")
-    group = p.parse_group()
-    if p.peek() is not None:
-        raise SparqlSyntaxError(f"trailing tokens at {p.peek()}")
-    if delete_where_shorthand:
-        if not group.is_plain_triples():
-            raise SparqlSyntaxError(
-                "DELETE WHERE shorthand needs a plain triple block"
-            )
-        templates.append(("DELETE", group))
-    if has_using:
-        dataset: list[str] = using
+    """Solve a parsed SPARQL 1.1 Update Modify operation (§3.1.3, incl.
+    the DELETE WHERE shorthand) over ``quads``. ``WITH`` supplies the
+    GRAPH scope for un-scoped template patterns and the WHERE default
+    graph; ``USING [NAMED]`` mirrors ``FROM [NAMED]`` and overrides WITH
+    for the WHERE clause. Both templates instantiate against the SAME
+    solution set; the returned ops list orders DELETE before INSERT per
+    the spec — each op is (form, {graph uri → distinct quad DataFrame})
+    so the caller can route batches to their owning stores (materialize
+    all batches before committing any: committing the DELETE first
+    would otherwise change what a lazy INSERT batch scans). Solving +
+    instantiation are pure DataFrame algebra; committing through
+    ``merge_df`` / ``delete_df`` keeps the whole update distributed (no
+    driver-side triple lists) — the rule-based materialization path a
+    KG pipeline uses for derived edges."""
+    with_graph = op.with_graph
+    if op.using or op.using.named is not None:
+        dataset: list[str] = op.using
     elif with_graph is not None:
         dataset = [with_graph]
     else:
         dataset = []
-    sol = _compile_group(quads, group, dataset)
+    sol = _compile_group(quads, op.where, dataset)
     cols = set(sol.columns)
     ops: list[tuple[str, dict[str, DataFrame]]] = []
-    for form, template in templates:
+    for form, template in op.templates:
         if not template.is_plain_triples():
             raise SparqlSyntaxError(
                 "update template must be a plain triple block"
@@ -3341,9 +3421,9 @@ def sparql_update_template(
 
 
 def parse_group_text(text: str) -> Group:
-    """Parse a standalone ``{ … }`` group graph pattern (used by the
-    in-process endpoint to decode the bodies of INSERT DATA / DELETE
-    DATA / DELETE WHERE updates, which share the group grammar)."""
+    """Parse a standalone ``{ … }`` group graph pattern (the Graph Store
+    Protocol handlers decode N-Triples payloads with it — N-Triples is a
+    subset of the triple-block grammar)."""
     p = _Parser(text)
     g = p.parse_group()
     if p.peek() is not None:

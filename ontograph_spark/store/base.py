@@ -20,6 +20,12 @@ pruning and join planning for free:
 Set semantics invariant: the quad table never contains two identical
 ``(subj, pred, obj, graph)`` rows (memory_store.go:125-134, 160-167).
 
+Writers are serialized: each mutation holds the store's writer lock
+across its read → check → commit, so concurrent callers (the threaded
+HTTP server) neither lose a commit nor race for one snapshot name —
+per instance for ``MemoryQuadStore``, per backing-table root for
+``ParquetQuadStore``. Writers in separate processes stay out of scope.
+
 Backends supply storage by implementing ``_df``/``_commit``:
 ``MemoryQuadStore`` (checkpointed in-memory DataFrame — the analogue of the
 reference's in-memory store) and ``ParquetQuadStore`` (snapshot directories
@@ -30,7 +36,9 @@ Iceberg row-level operations instead).
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Iterable
+from functools import wraps
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,12 +76,26 @@ def pattern_filter(subj: str = "", pred: str = "", obj: str = "") -> Column:
     return cond
 
 
+def _serialized(method):
+    """Run a store mutation under the store's writer lock."""
+
+    @wraps(method)
+    def locked(self, *args, **kwargs):
+        with self._write_lock:
+            return method(self, *args, **kwargs)
+
+    return locked
+
+
 class QuadStoreBase:
     """One named graph over a quad table (graph_store.go:9-50)."""
 
     def __init__(self, spark: SparkSession, uri: str) -> None:
         self.spark = spark
         self._uri = uri
+        #: held across each mutation's read → check → commit; backends
+        #: whose table several stores share replace it with a shared lock
+        self._write_lock = threading.RLock()
 
     # -- backend contract -------------------------------------------------
 
@@ -143,6 +165,7 @@ class QuadStoreBase:
 
     # -- write path (graph_store.go #4,6-13) ------------------------------
 
+    @_serialized
     def delete_all_matches(self, subj: str = "", pred: str = "", obj: str = "") -> None:
         """Anti-filter rewrite; no-op when nothing matches."""
         keep = ~((F.col("graph") == self._uri) & pattern_filter(subj, pred, obj))
@@ -156,6 +179,7 @@ class QuadStoreBase:
         """Checked insert (memory_store.go:125-134)."""
         self.add_triples([triple])
 
+    @_serialized
     def add_triples(self, triples: list[Triple]) -> None:
         """Atomic checked batch: the reference adds sequentially and rolls
         back on the first conflict (memory_store.go:137-157), so the
@@ -179,6 +203,7 @@ class QuadStoreBase:
     def add_triple_unchecked(self, triple: Triple) -> None:
         self.add_triples_unchecked([triple])
 
+    @_serialized
     def add_triples_unchecked(self, triples: list[Triple]) -> None:
         """Idempotent bulk insert — the pipeline's main write path
         (UpsertResource → AddTriplesUnchecked, ontology_graph.go:275).
@@ -190,6 +215,7 @@ class QuadStoreBase:
         fresh = new_df.join(self.df(), on=QUAD_COLS, how="left_anti")
         self._commit(self._df().unionByName(fresh), op="add", touched=new_df)
 
+    @_serialized
     def merge_df(self, quads: DataFrame) -> None:
         """Distributed idempotent MERGE of a quad DataFrame (same columns).
         This is the scale path: callers hand an arbitrarily large triple
@@ -198,6 +224,7 @@ class QuadStoreBase:
         fresh = new_df.join(self._df(), on=QUAD_COLS, how="left_anti")
         self._commit(self._df().unionByName(fresh), op="merge", touched=new_df)
 
+    @_serialized
     def delete_df(self, quads: DataFrame) -> None:
         """Distributed unchecked delete of a quad DataFrame (same
         columns) — the DataFrame twin of ``delete_triples_unchecked``
@@ -211,6 +238,7 @@ class QuadStoreBase:
         """Checked delete (memory_store.go:181-190)."""
         self.delete_triples([triple])
 
+    @_serialized
     def delete_triples(self, triples: list[Triple]) -> None:
         """Atomic checked batch delete: all requested rows must exist and
         be distinct, else the post-state is unchanged and
@@ -233,6 +261,7 @@ class QuadStoreBase:
     def delete_triple_unchecked(self, triple: Triple) -> None:
         self.delete_triples_unchecked([triple])
 
+    @_serialized
     def delete_triples_unchecked(self, triples: list[Triple]) -> None:
         if not triples:
             return
@@ -245,6 +274,7 @@ class QuadStoreBase:
             touched=req_df,
         )
 
+    @_serialized
     def upsert_subjects(
         self, subjects: DataFrame, quads: DataFrame, broadcast: bool = True
     ) -> None:
@@ -291,6 +321,7 @@ class QuadStoreBase:
             r["graph"] for r in self._df().select("graph").distinct().collect()
         )
 
+    @_serialized
     def drop(self) -> None:
         """Clear the store and render it unusable (memory_store.go:235-239)."""
         self._drop_backend()

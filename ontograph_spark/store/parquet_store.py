@@ -33,9 +33,15 @@ root/
   rewrite, which is then the cheaper plan anyway. Snapshot expiry is
   link-safe: unlinking an old snapshot's files never affects a newer one
   that still references the same inodes.
-* Data is laid out by **graph + salted subject** so one hot subject
-  (or the ``rdf:type`` fan-in) cannot skew file sizes; see
-  pipeline/materialize.py for the salting rationale.
+* Data is laid out by **graph + salted subject** (``SALT_BUCKETS``
+  buckets, fixed for every root so a reopened table keeps one
+  subject → bucket map) so one hot subject (or the ``rdf:type``
+  fan-in) cannot skew file sizes; see pipeline/materialize.py for the
+  salting rationale.
+* Writers in this process are serialized per root (``realpath``): every
+  store over one root, whichever graph it serves, shares one writer
+  lock, so two commits never race for the same snapshot name. Writers
+  in separate processes stay out of scope.
 
 This mirrors the role of the reference's Blazegraph backend
 (/root/reference/blazegraph_store.go) — the durable, larger-than-memory
@@ -47,6 +53,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 from functools import reduce
 from urllib.parse import unquote
@@ -59,6 +66,11 @@ from ontograph_spark.store.base import QUAD_SCHEMA, QuadStoreBase
 
 CURRENT_FILE = "CURRENT"
 SNAPSHOT_DIR = "snapshots"
+#: subject-salt buckets per graph partition
+SALT_BUCKETS = 16
+
+#: realpath of a store root → the writer lock every store on it shares
+_ROOT_LOCKS: dict[str, threading.RLock] = {}
 
 
 def _atomic_write(path: str, content: str) -> None:
@@ -84,19 +96,21 @@ class ParquetQuadStore(QuadStoreBase):
         uri: str,
         root: str,
         write_partitions: int | None = None,
-        salt_buckets: int = 16,
         scope_limit: int = 64,
     ) -> None:
         super().__init__(spark, uri)
         self.root = root
         self.write_partitions = write_partitions
-        self.salt_buckets = salt_buckets
         #: commits touching more partitions than this rewrite fully
         self.scope_limit = scope_limit
         os.makedirs(os.path.join(root, SNAPSHOT_DIR), exist_ok=True)
         meta_path = os.path.join(root, "_meta.json")
         if not os.path.exists(meta_path):
             _atomic_write(meta_path, json.dumps({"uri": uri, "version": 1}))
+        # dict.setdefault is atomic, so racing constructors get one lock
+        self._write_lock = _ROOT_LOCKS.setdefault(
+            os.path.realpath(root), threading.RLock()
+        )
 
     # -- snapshot protocol ------------------------------------------------
 
@@ -116,7 +130,7 @@ class ParquetQuadStore(QuadStoreBase):
         return f"v{n:08d}"
 
     def _salt_col(self):
-        return F.pmod(F.xxhash64(F.col("subj")), F.lit(self.salt_buckets)).cast(
+        return F.pmod(F.xxhash64(F.col("subj")), F.lit(SALT_BUCKETS)).cast(
             "int"
         )
 

@@ -48,7 +48,7 @@ def _files_by_partition(root: str, snapshot: str) -> dict[str, dict[str, int]]:
 @pytest.fixture()
 def store(spark, tmp_path):
     s = ParquetQuadStore(
-        spark, URI, str(tmp_path / "quads"), write_partitions=2, salt_buckets=4
+        spark, URI, str(tmp_path / "quads"), write_partitions=2
     )
     s.add_triples([_t(i) for i in range(40)])
     return s
@@ -102,7 +102,7 @@ def test_noop_delete_links_everything(store):
 
 def test_drop_graph_links_other_graphs(spark, store):
     other = ParquetQuadStore(
-        spark, "urn:other", store.root, write_partitions=2, salt_buckets=4
+        spark, "urn:other", store.root, write_partitions=2
     )
     other.add_triples([_t(i, "urn:other") for i in range(10)])
     before = _files_by_partition(store.root, other.current_snapshot())
@@ -187,3 +187,40 @@ def test_time_travel_and_diff(spark, tmp_path):
     with pytest.raises(ValueError, match="expired"):
         s.df_at(v1)
     assert {r.subj for r in s.df().collect()} == live_rows
+
+
+def test_concurrent_writers_serialize_per_root(spark, tmp_path):
+    """Two threads commit through two store objects on one root (one
+    spelled with a trailing '/.'): every add lands, and each manifest's
+    parent is the snapshot before it — no lost update, no two commits
+    racing for one snapshot name."""
+    import threading
+
+    root = str(tmp_path / "quads")
+    a = ParquetQuadStore(spark, URI, root, write_partitions=2)
+    a.add_triples([_t(i) for i in range(20)])
+    b = ParquetQuadStore(spark, URI, os.path.join(root, "."), write_partitions=2)
+    errors = []
+
+    def writer(store, first):
+        try:
+            for i in range(first, first + 5):
+                store.add_triple_unchecked(_t(i))
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    threads = [
+        threading.Thread(target=writer, args=(a, 100)),
+        threading.Thread(target=writer, args=(b, 200)),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == []
+    assert a.size() == 30
+    history = a.history()
+    assert len(history) == 11
+    assert [m["parent"] for m in history] == [None] + [
+        m["snapshot"] for m in history[:-1]
+    ]

@@ -221,6 +221,20 @@ def test_alias_canonicalization_merges_modules(spark, small_input):
     assert surviving == []
 
 
+def test_connected_components_raises_when_unconverged(spark):
+    """A 5-edge chain needs 6 label-propagation rounds: fewer raise
+    instead of returning split components."""
+    from ontograph_spark.pipeline.canon import connected_components
+
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}") for i in range(5)], "src string, dst string"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, max_iterations=3)
+    labels = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+    assert labels == {f"n{i}": "n0" for i in range(6)}
+
+
 def test_resumable_construction(spark, tmp_path, small_input):
     df, rows = small_input
     root = str(tmp_path / "kg")

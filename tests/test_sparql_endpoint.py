@@ -133,6 +133,14 @@ def test_typed_literal_binding_round_trip(endpoint):
     c.add_triple_unchecked(t)
     # term → binding (endpoint) → term (client) must be lossless
     assert c.get_all_triples() == [t]
+    # a prologue before the DATA forms: prefixed names and datatypes
+    # expand to the same encoded terms
+    prologue = "PREFIX t: <urn:t#>\nPREFIX xsd: <http://www.w3.org/2001/XMLSchema#>\n"
+    endpoint.update(f'{prologue}INSERT DATA {{ GRAPH <urn:t> {{ t:y t:p "3.5"^^xsd:decimal }} }}')
+    assert c.size() == 2
+    assert c.get_first_match(mk_resource("urn:t#y"), "", "").object == t.object
+    endpoint.update(f'{prologue}DELETE DATA {{ GRAPH <urn:t> {{ t:x t:p "3.5"^^xsd:decimal }} }}')
+    assert [r.subject for r in c.get_all_triples()] == ["<urn:t#y>"]
 
 
 def test_endpoint_rejects_unknown_update(endpoint):
@@ -228,6 +236,27 @@ def test_template_delete_where(endpoint, client):
     assert client.size() == 6
     left = client.get_all_matches(mk_resource(U), mk_resource(f"{U}#rel-1"), "")
     assert {t.object for t in left} == {f"<{U}#b>", f"<{U}#c>"}
+    # DELETE WHERE is the same Modify with the WHERE group as template:
+    # the patterns join and a repeated variable binds one value, with or
+    # without a prologue (SPARQL 1.1 Update §3.1.3.3)
+    loop = new_triple(mk_resource(f"{U}#a"), mk_resource(f"{U}#rel-2"), mk_resource(f"{U}#a"))
+    for prologue, rel1, rel2 in (
+        ("", f"<{U}#rel-1>", f"<{U}#rel-2>"),
+        (f"PREFIX u: <{U}#>\n", "u:rel-1", "u:rel-2"),
+    ):
+        client.add_triples_unchecked(TRIPLES)
+        endpoint.update(
+            f"{prologue}DELETE WHERE {{ GRAPH <{U}> "
+            f"{{ <{U}> {rel1} ?o . ?o {rel2} ?x }} }}"
+        )
+        assert as_set(client.get_all_triples()) == as_set(
+            [TRIPLES[1], TRIPLES[2], *TRIPLES[4:]]
+        )
+        client.add_triples_unchecked([TRIPLES[3], loop])
+        endpoint.update(
+            f"{prologue}DELETE WHERE {{ GRAPH <{U}> {{ ?s {rel2} ?s }} }}"
+        )
+        assert client.get_all_matches("", mk_resource(f"{U}#rel-2"), "") == [TRIPLES[3]]
 
 
 def test_template_update_requires_graph_scope(endpoint, client):
@@ -452,6 +481,13 @@ def test_graph_management_updates(spark):
     # COPY onto itself is a no-op
     ep.update("COPY <urn:dst> TO <urn:dst>")
     assert ep.store_for("urn:dst").size() == 2
+    # a prologue, and prefixed graph names, in COPY / CLEAR / DROP
+    ep.update("PREFIX ex: <urn:>\nCOPY ex:dst TO GRAPH ex:copied")
+    assert ep.store_for("urn:copied").size() == 2
+    ep.update("PREFIX ex: <urn:>\nCLEAR GRAPH ex:copied")
+    assert ep.store_for("urn:copied").size() == 0
+    ep.update("PREFIX ex: <urn:>\nDROP GRAPH <urn:copied>")
+    assert "urn:copied" not in ep._stores
 
 
 # ---------------------------------------------------------------------------
